@@ -3,7 +3,8 @@
 
 Runs the headline pipeline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line:  {"metric": ..., "value": <total sec>, "unit": "sec",
+line (SPARK_GRAFT_CPUS defaults to the process's usable cores):
+        {"metric": ..., "value": <total sec>, "unit": "sec",
         "queries": {name: sec}, "sf": ..., "rows_per_sec": ...}
 
 Headline set = the parse→route→aggregate pipeline over redo statements
@@ -26,8 +27,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from redo_log_parser_spark.session import usable_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = str(usable_cores())
 
 
 def _spark(cpus: str, parts_mult: int = 1):

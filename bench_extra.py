@@ -19,18 +19,16 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from redo_log_parser_spark.session import usable_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = str(usable_cores())
 
 
 def _spark():
     from redo_log_parser_spark.session import get_spark
 
-    return get_spark(
-        "rlps-bench-extra",
-        master=f"local[{CPUS}]",
-        confs={"spark.sql.shuffle.partitions": str(int(CPUS))},
-    )
+    return get_spark("rlps-bench-extra", master=f"local[{CPUS}]")
 
 
 def _queries():

@@ -25,13 +25,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from redo_log_parser_spark.session import usable_cores  # noqa: E402
+
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", nargs="+", required=True)
     ap.add_argument("--sf", nargs="+", required=True)
     ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=str(usable_cores()))
     args = ap.parse_args()
 
     from bench import _spark, headline_queries

@@ -12,6 +12,15 @@ Cluster deployment (north rule):
     --input <catalog>.documents --output s3://.../out \\
     --root-class '"SYSTEM"."ORDERS"' --buckets 4096 --run-id r1
 
+Every --conf given to the launcher is honoured: the session's own
+defaults (redo_log_parser_spark/session.py) fill only the keys that
+neither the launcher nor spark-defaults.conf set. A local run (no
+master, or local[N]) defaults to one shuffle partition per worker
+thread, so one per usable core (SPARK_GRAFT_CPUS overrides the count),
+and to a driver heap of half the host's memory (SPARK_DRIVER_MEM
+overrides it). On a cluster master the session sets no partition count:
+pass one as above.
+
 Packaging: `python jobs/make_pyfiles.py` zips redo_log_parser_spark/
 into rlps.zip for --py-files AT DEPLOY TIME (the zip is gitignored —
 never committed, so it cannot go stale relative to the source tree).

@@ -199,18 +199,6 @@ def mini_log_lines() -> list[str]:
     return lines
 
 
-def scaled_log_documents(n_records: int, seed: int = 42) -> pd.DataFrame:
-    """Benchmark-scale generator: replicates the mini-log state machine
-    over `n_records` statements with distinct entity ids per replica so
-    schema ground truth is preserved at any scale."""
-    base_len = len(mini_log_statements())
-    reps = (n_records + base_len - 1) // base_len
-    stmts: list[Stmt] = []
-    for r in range(reps):
-        stmts.extend(mini_log_statements(id_offset=2000 * r, rep=r))
-    return statements_to_documents(stmts[:n_records], seed=seed)
-
-
 def enrichment_dims() -> tuple[pd.DataFrame, pd.DataFrame]:
     """Broadcast-join dictionaries (FIXTURES.md §2)."""
     table_dict = pd.DataFrame(

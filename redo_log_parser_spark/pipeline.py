@@ -21,14 +21,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .caching import operator_caches, register
 from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.javaspace import java_equals_ignore_case
 from .functions.parse import parse_documents
 from .functions.parse_sql import parse_documents_sql
-from .functions.xes import trace_xml, with_xes_columns
+from .functions.xes import trace_xml, trace_xml_pretty, with_xes_columns
 from .operators.rowid import uniquify_row_ids
 from .operators.schema_discovery import discover_schema, summarize_schema, SchemaSummary
 from .operators.traces import (
@@ -39,6 +40,7 @@ from .operators.traces import (
     root_cases,
 )
 from .sinks.fanout import write_fanout
+from .sinks.xes import reference_trace_order, write_xes_document
 
 
 def enrich(events: DataFrame, table_dict: DataFrame | None = None,
@@ -148,30 +150,32 @@ def run_pipeline(
     (pure-JVM expression parser — identical output on well-formed
     records, no Python workers; see functions/parse_sql.py)."""
     result = PipelineResult(out_dir=out_dir)
-
     parse_fn = parse_documents if parser == "pandas" else parse_documents_sql
-    parsed = parse_fn(docs, cfg)
-    events = uniquify_row_ids(parsed).cache()
-    enriched = enrich(events, table_dict, lang_map)
+    # every frame cached here or by an operator (discovery's column
+    # writes and distinct values, the trace edges) is released on return
+    with operator_caches():
+        parsed = parse_fn(docs, cfg)
+        events = register(uniquify_row_ids(parsed).cache())
+        enriched = enrich(events, table_dict, lang_map)
 
-    if write_sinks:
-        result.routed_counts = write_fanout(enriched, out_dir)
+        if write_sinks:
+            result.routed_counts = write_fanout(enriched, out_dir)
 
-    clean = enriched.filter(F.col("parse_error").isNull())
-    cols_df, ind_df = discover_schema(
-        clean,
-        strict=cfg.strict_primary_keys,
-        ind_mode="eager" if cfg.eager_ind else "final",
-        mono_mode="reference" if cfg.reference_monotonicity else "log",
-    )
-    result.schema = summarize_schema(cols_df, ind_df)
+        clean = enriched.filter(F.col("parse_error").isNull())
+        cols_df, ind_df = discover_schema(
+            clean,
+            strict=cfg.strict_primary_keys,
+            ind_mode="eager" if cfg.eager_ind else "final",
+            mono_mode="reference" if cfg.reference_monotonicity else "log",
+        )
+        result.schema = summarize_schema(cols_df, ind_df)
 
-    # Multi-root: the reference loops "pick a root → emit XES" over the
-    # SAME parsed log and discovered schema until --singleRun
-    # (Main.scala:131-162); here every requested root reuses the cached
-    # events and the one discovery pass — one trace sink per root.
-    roots = cfg.all_root_classes
-    if roots:
+        # Multi-root: the reference loops "pick a root → emit XES" over
+        # the SAME parsed log and discovered schema until --singleRun
+        # (Main.scala:131-162); here every requested root reuses the
+        # cached events and the one discovery pass — one trace sink per
+        # root.
+        roots = cfg.all_root_classes
         for rc in roots:
             # Java equalsIgnoreCase, not lowercase equality — matches
             # the trace layer's table matching (javaspace)
@@ -189,39 +193,39 @@ def run_pipeline(
                 clean, result.schema, rc,
                 cfg.include_update_values, cfg.n_salt,
             )
-            dest = (
-                f"{out_dir}/traces_xes"
-                if len(roots) == 1
-                else f"{out_dir}/traces_xes/{safe_names[rc]}"
-            )
+            write_doc = cfg.xes_document and write_sinks
+            if write_doc:
+                # the sink and the .xes document read the same traces:
+                # build them once
+                traces = register(traces.cache())
             if write_sinks:
-                traces.select("case_id", "trace_xml").write.mode(
-                    "overwrite"
-                ).parquet(dest)
-                n = docs.sparkSession.read.parquet(dest).count()
+                dest = (
+                    f"{out_dir}/traces_xes"
+                    if len(roots) == 1
+                    else f"{out_dir}/traces_xes/{safe_names[rc]}"
+                )
+                obs = Observation()
+                traces.select("case_id", "trace_xml").observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                ).write.mode("overwrite").parquet(dest)
+                n = int(obs.get["n"])
             else:
                 n = traces.count()
-            if cfg.xes_document and write_sinks:
+            if write_doc:
                 # one complete reference-style .xes per root
                 # (Main.scala:149-153 writes <path>_<root>_result.xes)
-                from .functions.xes import trace_xml_pretty
-                from .sinks.xes import (
-                    reference_trace_order, write_xes_document)
-
-                doc_path = (
-                    f"{out_dir}/{safe_names[rc]}_result.xes"
-                )
                 order = (
                     reference_trace_order(clean, rc)
                     if cfg.reference_trace_order
                     else None
                 )
                 write_xes_document(
-                    trace_xml_pretty(traces), doc_path, rc, pretty=True,
-                    case_order=order,
+                    trace_xml_pretty(traces),
+                    f"{out_dir}/{safe_names[rc]}_result.xes",
+                    rc, pretty=True, case_order=order,
                 )
+                traces.unpersist()
             result.n_traces_by_root[rc] = n
             result.n_traces += n
 
-    events.unpersist()
     return result

@@ -364,3 +364,20 @@ def test_verbose_entry_dumps(spark, mini_docs, capsys):
     assert ("Transformed the following log entries and their row "
             "identifiers:") in out
     assert "only showing top 5 rows" in out
+
+
+def test_run_pipeline_releases_its_caches(spark, mini_docs_pdf, tmp_path):
+    """run_pipeline unpersists every frame it or its operators cache
+    (events, discovery's column writes and distinct values, trace edges,
+    the per-root traces behind the .xes document): the session holds as
+    many persistent RDDs after a run as before it."""
+    docs = spark.createDataFrame(mini_docs_pdf)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    cfg = PipelineConfig(
+        root_classes=('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"'),
+        xes_document=True,
+    )
+    res = run_pipeline(docs, str(tmp_path / "out"), cfg)
+    assert res.n_traces_by_root['"SYSTEM"."ORDERS"'] == 70
+    assert jsc.getPersistentRDDs().size() == before
